@@ -13,9 +13,9 @@ Scale design:
   kernel, no per-row Python) → ``posexplode`` band keys → equi-join;
 * oversized blocks (hot keys — boilerplate/empty conversations) are CAPPED
   before the self-join: the |block|² pair explosion is the ER scale
-  killer. Dropped-key counts are reported as lineage metrics
-  (reference analog of its ``top_k``/``num_cand_mentions`` caps,
-  ``elq/main_dense.py:851-856``);
+  killer. ``cap_blocks`` returns the dropped-key counts; they are not yet
+  reported anywhere (reference analog of its ``top_k``/``num_cand_mentions``
+  caps, ``elq/main_dense.py:851-856``);
 * the pair self-join runs under AQE skew-join; pairs are canonicalized
   ``(least, greatest)`` + de-duplicated before stage 2.
 """
@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 
 from blink_spark.functions import hashing as H
 from blink_spark.functions.text import canonicalize
+from blink_spark.operators import skew
 
 
 @dataclass
@@ -210,10 +211,11 @@ def block_keys(features: DataFrame) -> DataFrame:
 def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFrame]:
     """Drop blocking keys whose block exceeds the cap (skew guard).
 
-    Returns ``(kept_keys, dropped_key_stats)``; the latter is small and
-    feeds the lineage metrics table. A hot key with B members would emit
-    B² candidate pairs — at 10^12 turns a single boilerplate key could
-    otherwise generate more pairs than the rest of the corpus combined.
+    Returns ``(kept_keys, dropped_key_stats)``; the latter is small (one
+    row per hot key with its block size) and not yet reported. A hot key
+    with B members would emit B² candidate pairs — at 10^12 turns a single
+    boilerplate key could otherwise generate more pairs than the rest of
+    the corpus combined.
     """
     sizes = keys.groupBy("modality", "key").agg(F.count(F.lit(1)).alias("block_size"))
     dropped = sizes.where(F.col("block_size") > max_block_size)
@@ -226,7 +228,10 @@ def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFra
 
 
 def candidate_pairs(
-    keys: DataFrame, cfg: BlockingConfig | None = None, caches: list | None = None
+    keys: DataFrame,
+    cfg: BlockingConfig | None = None,
+    caches: list | None = None,
+    new_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Self-equi-join on (modality, key) → canonical deduped candidate pairs.
 
@@ -240,11 +245,15 @@ def candidate_pairs(
     checkpoint table. The persisted handle is appended to ``caches`` (if
     given) so callers can release it; ``ERPipeline`` wires this to
     ``PipelineResult.unpersist()``.
+
+    Delta mode (``new_keys`` given, see ``incremental.delta_candidate_pairs``):
+    ``keys`` is the old ∪ new key table flagged ``is_new``, ``new_keys`` the
+    delta's distinct ``(modality, key)`` set. The cap/split census runs over
+    the whole union, so the result is exactly the batch pairs over old ∪ new
+    that have a new side, under either overflow policy.
     """
     cfg = cfg or BlockingConfig()
     if cfg.overflow == "split":
-        from blink_spark.operators import skew
-
         kept, _ = skew.split_hot_blocks(keys, cfg.max_block_size)
         join_cols = ["modality", "key", "salt"]
     else:
@@ -253,28 +262,45 @@ def candidate_pairs(
     kept = kept.persist()
     if caches is not None:
         caches.append(kept)
-    sides = [F.col("modality"), F.col("key")] + ([F.col("salt")] if cfg.overflow == "split" else [])
-    a = kept.select(*sides, F.col("conv_id").alias("conv_a"), F.col("sig").alias("sig_a"))
-    b = kept.select(*sides, F.col("conv_id").alias("conv_b"), F.col("sig").alias("sig_b"))
+    # n = the probing side (the NEW conversations in delta mode), o = the other
+    n, o = F.col("conv_n"), F.col("conv_o")
+    a, b, flag = kept, kept, []
+    pair_ok, lo, hi = n < o, n, o
+    if new_keys is not None:
+        a = kept.where("is_new")
+        # prune the (old ∪ new) side to keys the DELTA carries BEFORE the
+        # pair join shuffles it: at 10^12 turns with a micro-batch delta,
+        # almost every old key row would otherwise be shuffled to match
+        # nothing. The broadcast rides the smallness of a micro-batch. The
+        # prune runs AFTER the cap (census stays batch-identical) and by
+        # the uncapped new key set (a superset of `a`'s keys): lossless.
+        b = kept.join(F.broadcast(new_keys), ["modality", "key"], "left_semi")
+        # new×new once (ordered); new×old in either orientation, made
+        # unique by the (least, greatest) canonicalization
+        pair_ok = (~F.col("is_new") & (n != o)) | (F.col("is_new") & (n < o))
+        lo, hi, flag = F.least(n, o), F.greatest(n, o), ["is_new"]
+    a = a.select(*join_cols, F.col("conv_id").alias("conv_n"), F.col("sig").alias("sig_n"))
+    b = b.select(*join_cols, F.col("conv_id").alias("conv_o"), F.col("sig").alias("sig_o"), *flag)
     hamming_ok = (F.col("modality") != "simhash") | (
-        F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= cfg.sim_max_hamming
+        F.bit_count(F.col("sig_n").bitwiseXOR(F.col("sig_o"))) <= cfg.sim_max_hamming
     )
     # ONE aggregation over (conv_a, conv_b) with per-modality conditional
     # counts — a per-(pair, modality) groupBy followed by a dedup would be
     # two shuffles of the pair stream for the same answer
     shared = (
         a.join(b, on=join_cols)
-        .where((F.col("conv_a") < F.col("conv_b")) & hamming_ok)
+        .where(pair_ok)
+        .where(hamming_ok)
+        .select(lo.alias("conv_a"), hi.alias("conv_b"), "modality")
         .groupBy("conv_a", "conv_b")
         .agg(
             F.sum(F.when(F.col("modality") == "minhash", 1).otherwise(0)).alias("mh_shared"),
             F.max(F.when(F.col("modality") == "simhash", 1).otherwise(0)).alias("sh_hit"),
         )
     )
-    pairs = shared.where(
+    return shared.where(
         (F.col("sh_hit") == 1) | (F.col("mh_shared") >= cfg.min_shared_minhash_bands)
     ).select("conv_a", "conv_b")
-    return pairs
 
 
 def global_rank(

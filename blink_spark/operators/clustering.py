@@ -78,8 +78,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
 
     ``cluster_id`` is the lexicographic minimum conv_id of the component —
     deterministic and stable across runs/parallelism. Nodes appearing only
-    as singletons are absent (callers ``coalesce`` to self; see
-    :meth:`blink_spark.pipeline.ERPipeline.run`).
+    as singletons are absent (see :func:`with_singletons`).
     """
     cur = (
         edges.select(F.col("conv_a").alias("u"), F.col("conv_b").alias("v"))
@@ -102,3 +101,18 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         .agg(F.min("cluster_id").alias("cluster_id"))
     )
     return assignments
+
+
+def with_singletons(
+    conv_ids: DataFrame, assignments: DataFrame, prior: DataFrame | None = None
+) -> DataFrame:
+    """Full assignment over ``conv_ids``: a conversation with no edge is its
+    own cluster. ``assignments`` is a :func:`connected_components` result;
+    ``prior`` (an older full assignment, incremental path) labels the
+    conversations CC did not see before the self fallback applies."""
+    out = conv_ids.join(assignments, "conv_id", "left")
+    fallback = [F.col("conv_id")]
+    if prior is not None:
+        out = out.join(prior.withColumnRenamed("cluster_id", "_old_cid"), "conv_id", "left")
+        fallback = ["_old_cid", F.col("conv_id")]
+    return out.select("conv_id", F.coalesce("cluster_id", *fallback).alias("cluster_id"))

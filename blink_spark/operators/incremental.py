@@ -68,70 +68,20 @@ def delta_candidate_pairs(
 ) -> DataFrame:
     """Candidate pairs with at least one new side, never old×old.
 
-    Mirrors :func:`blocking.candidate_pairs` exactly (same cap, same
-    shared-band aggregation, same SimHash Hamming verify) with one change:
-    the left join side carries only NEW conversations, and new×new rows are
-    kept once via ``conv_a < conv_b`` while new×old rows are kept in both
-    orientations' canonical form — each shared key contributes exactly one
-    row per pair, so the shared-band counts match the batch plan's.
+    The hash modalities run :func:`blocking.candidate_pairs` in delta mode
+    over the union key table (same cap or split, same shared-band count,
+    same SimHash Hamming verify as a batch run); the optional SNM leg is
+    added here.
     """
     cfg = cfg or blocking.BlockingConfig()
     keys_new = blocking.block_keys(features_new).withColumn("is_new", F.lit(True))
     keys_old = blocking.block_keys(features_old).withColumn("is_new", F.lit(False))
-    keys_all = keys_new.unionByName(keys_old)
-
-    # skew cap over the UNION key table — the same block sizes a full batch
-    # over the whole corpus would see
-    kept, _ = blocking.cap_blocks(keys_all, cfg.max_block_size)
-    kept = kept.persist()
-    if caches is not None:
-        caches.append(kept)
-
-    a = kept.where("is_new").select(
-        "modality", "key", F.col("conv_id").alias("conv_n"), F.col("sig").alias("sig_n")
+    pairs = blocking.candidate_pairs(
+        keys_new.unionByName(keys_old),
+        cfg,
+        caches=caches,
+        new_keys=keys_new.select("modality", "key").dropDuplicates(),
     )
-    # prune the (old ∪ new) join side to keys the DELTA actually carries
-    # BEFORE the pair join shuffles it: only keys present on the new side
-    # can produce a pair, yet without the prune the equi-join would shuffle
-    # every old key row — at 10^12 turns with a micro-batch delta, almost
-    # all of the shuffle for rows that match nothing. The broadcast semi on
-    # the delta's distinct key set rides the same smallness assumption the
-    # SNM leg's broadcast of new_ids already makes (a micro-batch is small
-    # by definition; ~tens of band keys per delta conv ≈ MBs). Pruning
-    # AFTER cap_blocks keeps the cap census batch-identical, and pruning
-    # by the UNCAPPED new key set is a superset of `a`'s keys — lossless.
-    new_key_set = keys_new.select("modality", "key").dropDuplicates()
-    b = (
-        kept.join(F.broadcast(new_key_set), ["modality", "key"], "left_semi")
-        .select(
-            "modality", "key", F.col("conv_id").alias("conv_o"), F.col("sig").alias("sig_o"), "is_new"
-        )
-    )
-    joined = a.join(b, on=["modality", "key"]).where(
-        # new×new once (ordered); new×old in every orientation — the
-        # (least, greatest) canonicalization below makes the pair unique
-        (~F.col("is_new") & (F.col("conv_n") != F.col("conv_o")))
-        | (F.col("is_new") & (F.col("conv_n") < F.col("conv_o")))
-    )
-    hamming_ok = (F.col("modality") != "simhash") | (
-        F.bit_count(F.col("sig_n").bitwiseXOR(F.col("sig_o"))) <= cfg.sim_max_hamming
-    )
-    shared = (
-        joined.where(hamming_ok)
-        .select(
-            F.least("conv_n", "conv_o").alias("conv_a"),
-            F.greatest("conv_n", "conv_o").alias("conv_b"),
-            "modality",
-        )
-        .groupBy("conv_a", "conv_b")
-        .agg(
-            F.sum(F.when(F.col("modality") == "minhash", 1).otherwise(0)).alias("mh_shared"),
-            F.max(F.when(F.col("modality") == "simhash", 1).otherwise(0)).alias("sh_hit"),
-        )
-    )
-    pairs = shared.where(
-        (F.col("sh_hit") == 1) | (F.col("mh_shared") >= cfg.min_shared_minhash_bands)
-    ).select("conv_a", "conv_b")
     if cfg.snm_window >= 2:
         # SNM delta leg: rank the UNION corpus (same ordering a full batch
         # would see) but keep only pairs with ≥1 new side. Old×old pairs
@@ -158,8 +108,8 @@ def delta_candidate_pairs(
 def star_edges(assignments: DataFrame) -> DataFrame:
     """Old assignment → spanning-forest edges (conv_id, cluster_id).
 
-    Self-assigned singletons carry no edge (they re-enter CC via the
-    singleton coalesce, exactly like the batch pipeline).
+    Self-assigned singletons carry no edge (they resolve through
+    :func:`clustering.with_singletons`, exactly like the batch pipeline).
     """
     return assignments.where(F.col("conv_id") != F.col("cluster_id")).select(
         F.col("conv_id").alias("conv_a"), F.col("cluster_id").alias("conv_b")
@@ -214,16 +164,8 @@ def incremental_update(
     merged = clustering.connected_components(
         delta_e.unionByName(touched_star), max_iter=config.cc_max_iter
     )
-    all_convs = features_all.select("conv_id")
-    assignments = (
-        all_convs.join(merged, "conv_id", "left")
-        .join(
-            assignments_old.withColumnRenamed("cluster_id", "_old_cid"), "conv_id", "left"
-        )
-        .select(
-            "conv_id",
-            F.coalesce("cluster_id", "_old_cid", F.col("conv_id")).alias("cluster_id"),
-        )
+    assignments = clustering.with_singletons(
+        features_all.select("conv_id"), merged, prior=assignments_old
     )
     return IncrementalResult(
         features=features_all,
@@ -305,6 +247,14 @@ def process_er_batch(batch_df: DataFrame, batch_id: int, state_dir: str, config:
       version never races its own input; older versions are pruned only
       AFTER the new one commits. Production form: an Iceberg snapshot
       commit — this directory scheme is the same idea on a plain FS.
+
+    Caveat, stated rather than hidden: a conversation whose turns span
+    micro-batches is featurized per batch from the turns that batch
+    carries, so it lands in the feature table once per batch, each row
+    from a fragment. Production ingestion should close conversations
+    upstream (session gap / end marker) or re-featurize conv_ids seen
+    again via an upsert sink (e.g. Iceberg MERGE keyed on conv_id) — not
+    implemented here.
     """
     if batch_df.isEmpty():
         return

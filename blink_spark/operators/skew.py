@@ -45,8 +45,8 @@ def split_hot_blocks(
 
     Input: one row per (member, blocking key). Output: same rows with the
     key replaced by ``(key, salt)`` for hot keys (salt = 0 otherwise), plus
-    a small stats DataFrame of the keys that were split (for lineage
-    metrics). A block of size B becomes ⌈B / max⌉ sub-blocks of expected
+    a small stats DataFrame of the keys that were split (not yet
+    reported). A block of size B becomes ⌈B / max⌉ sub-blocks of expected
     size ≈ max; candidate pairs then form within sub-blocks only, so pair
     volume per key drops from B² to O(B·max) in expectation — linear in B,
     which is the property that keeps a 10^12-row corpus's worst key from

@@ -155,10 +155,8 @@ def main(argv=None) -> int:
             k: round(v, 6) if isinstance(v, float) else int(v)
             for k, v in bq.asDict().items()
         }
-        gold_assign = (
-            res.assignments.select("conv_id")
-            .join(clustering.connected_components(gold_pos), "conv_id", "left")
-            .select("conv_id", F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"))
+        gold_assign = clustering.with_singletons(
+            res.assignments.select("conv_id"), clustering.connected_components(gold_pos)
         )
         b3 = metrics.b_cubed(res.assignments, gold_assign).collect()[0]
         out["b_cubed"] = {

@@ -48,9 +48,7 @@ def main() -> int:
         n_pairs = pairs.count()
         wall = round(time.time() - t0, 1)
         feats.unpersist()
-        for c in pipe.caches:
-            c.unpersist()
-        pipe.caches.clear()
+        pipe.unpersist()
         print(
             json.dumps(
                 {

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from blink_spark import synth
 from blink_spark.operators import blocking, incremental
-from blink_spark.pipeline import ERPipeline
+from blink_spark.pipeline import ERPipeline, PipelineConfig
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +25,15 @@ def _rows(df):
     return sorted((r["conv_id"], r["cluster_id"]) for r in df.collect())
 
 
+def _feature_table(spark, state_dir):
+    """Every committed feature row under ``state_dir/features`` (all batches)."""
+    return (
+        spark.read.option("basePath", f"{state_dir}/features")
+        .parquet(f"{state_dir}/features/batch_id=*")
+        .drop("batch_id")
+    )
+
+
 def test_incremental_equals_batch(spark, corpus):
     """Phase-1 batch on half the corpus + delta update with the other half
     must reproduce the one-shot full-batch assignment exactly — the
@@ -42,19 +51,51 @@ def test_incremental_equals_batch(spark, corpus):
     full.unpersist()
 
 
-def test_no_old_old_pairs(spark, corpus):
-    """The delta plan never generates old×old candidate pairs."""
+@pytest.fixture(scope="module")
+def split_features(spark, corpus):
     transcripts, _ = corpus
     old_t, new_t = _split(transcripts)
     pipe = ERPipeline()
     feats_old = pipe.build_features(pipe.build_docs(old_t)).persist()
     feats_new = pipe.build_features(pipe.build_docs(new_t)).persist()
-    new_ids = {r["conv_id"] for r in feats_new.select("conv_id").collect()}
-    pairs = incremental.delta_candidate_pairs(feats_old, feats_new)
-    for r in pairs.collect():
-        assert r["conv_a"] in new_ids or r["conv_b"] in new_ids
+    yield feats_old, feats_new
     feats_old.unpersist()
     feats_new.unpersist()
+
+
+@pytest.mark.parametrize(
+    "overflow,snm_window", [("drop", 0), ("split", 0), ("drop", 3)], ids=["drop-0", "split-0", "drop-3"]
+)
+def test_delta_pairs_equal_batch(spark, split_features, overflow, snm_window):
+    """The delta pair set is exactly the batch pair set over old ∪ new
+    restricted to pairs with a new side — so it never holds an old×old
+    pair, and it honours the overflow policy. The split case uses a cap
+    small enough that hot keys exist (split and drop then disagree)."""
+    feats_old, feats_new = split_features
+    cap = 2 if overflow == "split" else blocking.BlockingConfig().max_block_size
+    cfg = PipelineConfig(
+        blocking=blocking.BlockingConfig(overflow=overflow, snm_window=snm_window, max_block_size=cap)
+    )
+    feats_all = feats_old.unionByName(feats_new)
+    if overflow == "split":
+        assert blocking.cap_blocks(blocking.block_keys(feats_all), cap)[1].count() > 0
+    new_ids = {r["conv_id"] for r in feats_new.select("conv_id").collect()}
+
+    pipe = ERPipeline(cfg)
+    batch = {
+        (r["conv_a"], r["conv_b"])
+        for r in pipe.block(feats_all).collect()
+        if r["conv_a"] in new_ids or r["conv_b"] in new_ids
+    }
+    caches: list = []
+    delta = incremental.delta_candidate_pairs(feats_old, feats_new, cfg.blocking, caches=caches)
+    delta_rows = [(r["conv_a"], r["conv_b"]) for r in delta.collect()]
+    assert batch, "no pair has a new side: the comparison would be vacuous"
+    assert len(delta_rows) == len(set(delta_rows)), "delta pairs must be deduplicated"
+    assert set(delta_rows) == batch
+    pipe.unpersist()
+    for c in caches:
+        c.unpersist()
 
 
 def test_empty_delta_preserves_assignment(spark, corpus):
@@ -100,7 +141,8 @@ def test_bridge_conversation_merges_clusters(spark):
 
 def test_streaming_incremental_er(spark, corpus, tmp_path):
     """End-to-end streaming: two file-batches through incremental_er_stream
-    reproduce the one-shot batch assignment."""
+    reproduce the one-shot batch assignment, and the durable feature table
+    holds exactly the batch kernel's feature rows."""
     transcripts, _ = corpus
     old_t, new_t = _split(transcripts)
     src = str(tmp_path / "stream_src")
@@ -123,6 +165,14 @@ def test_streaming_incremental_er(spark, corpus, tmp_path):
     assert _rows(got) == _rows(full.assignments)
     full.unpersist()
 
+    def by_conv(rows):
+        return {r["conv_id"]: (r["minhash_keys"], r["simhash"]) for r in rows}
+
+    streamed = _feature_table(spark, str(tmp_path / "state")).collect()
+    batch = blocking.compute_features(blocking.conversation_docs(transcripts)).collect()
+    assert len(streamed) == len(batch)
+    assert by_conv(streamed) == by_conv(batch)
+
 
 def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     """Crash-recovery path: replaying a batch_id (the foreachBatch retry
@@ -133,8 +183,6 @@ def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     attempt. Pruning keeps the immediate predecessor version (the one a
     replay needs — the engine checkpoint-commits a batch only after
     process() returns) and deletes everything older."""
-    from blink_spark.pipeline import PipelineConfig
-
     transcripts, _ = corpus
     thirds = [transcripts.where(F.crc32("conv_id") % 3 == i) for i in range(3)]
     state = str(tmp_path / "state")
@@ -153,6 +201,8 @@ def test_er_batch_replay_idempotent(spark, corpus, tmp_path):
     assert replayed.groupBy("conv_id").count().where("count > 1").count() == 0
     assert _rows(replayed) == first
     assert incremental.list_assignment_versions(spark, state) == [1, 2]
+    feats = _feature_table(spark, state)
+    assert feats.count() == feats.select("conv_id").distinct().count() == len(first)
 
     # and the full streamed state equals the one-shot batch clustering
     full = ERPipeline().run(spark, transcripts, compute_metrics=False)

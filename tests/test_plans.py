@@ -12,6 +12,8 @@ PLANS.md and their cost measured in bench.py; re-running them per test
 would double the suite's runtime for no new information.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -75,8 +77,11 @@ def test_no_single_partition_window(spark):
 
 def test_blocking_candidate_pairs_plan_shape(spark):
     """The stage-1 pair join must be a hash equi-join on (modality, key)
-    with the capped key table reused (persisted), not recomputed per side."""
-    from blink_spark.operators import blocking
+    with the capped key table reused (persisted), not recomputed per side.
+    The delta form (incremental.delta_candidate_pairs) runs the same kernel
+    and must also keep its broadcast left-semi prune of the union key table
+    to the delta's (modality, key) set."""
+    from blink_spark.operators import blocking, incremental
 
     df = spark.createDataFrame(
         [(str(i), i % 7, f"text body {i % 5} {i % 3}") for i in range(50)],
@@ -87,9 +92,19 @@ def test_blocking_candidate_pairs_plan_shape(spark):
     keys = blocking.block_keys(feats)
     caches: list = []
     pairs = blocking.candidate_pairs(keys, caches=caches)
-    plan = _plan(pairs)
-    for bad in FORBIDDEN:
-        assert bad not in plan
-    assert "InMemoryTableScan" in plan, "capped key table should be persisted and reused"
+    delta = incremental.delta_candidate_pairs(
+        feats.where(F.col("conv_id").cast("int") % 2 == 0),
+        feats.where(F.col("conv_id").cast("int") % 2 == 1),
+        caches=caches,
+    )
+    for name, df in (("batch", pairs), ("delta", delta)):
+        plan = _plan(df)
+        for bad in FORBIDDEN:
+            assert bad not in plan, f"{name}: {bad} appeared in the physical plan"
+        assert "InMemoryTableScan" in plan, f"{name}: capped key table should be persisted and reused"
+    assert re.search(
+        r"BroadcastHashJoin \[modality, key\], \[modality, key\], LeftSemi",
+        re.sub(r"#\d+L?", "", _plan(delta)),
+    ), "delta: the broadcast left-semi prune to the delta key set is gone"
     for c in caches:
         c.unpersist()
