@@ -87,19 +87,17 @@ def _prepare_transcripts(spark, sf_dir: str, n_conversations: int | None = None)
     return path, n_turns
 
 
-def _er_query(spark, transcripts_path: str, caches: list) -> int:
+def _er_query(spark, transcripts_path: str, stages) -> int:
     """The flagship ER pipeline: parquet scan → block → score → cluster."""
     from blink_spark.pipeline import ERPipeline
 
     t = spark.read.parquet(transcripts_path)
-    res = ERPipeline().run(spark, t, compute_metrics=False)
-    n = res.assignments.count()
-    # hand the stage caches to the harness: it releases them after the
-    # clock stops (see ``timed``), so later bench queries never run under
-    # this job's storage/GC pressure but the release itself isn't billed
-    # to the query
-    caches.append(res)
-    return n
+    # the harness's manager owns the run's stages: it releases them after
+    # the clock stops (see ``timed``), so later bench queries never run
+    # under this job's storage/GC pressure but the release itself isn't
+    # billed to the query
+    res = ERPipeline().run(spark, t, checkpoints=stages, compute_metrics=False)
+    return res.assignments.count()
 
 
 def _warmup(spark) -> None:
@@ -123,24 +121,24 @@ def _bench_queries(spark, sf_dir: str) -> tuple[dict, dict]:
     from pyspark.sql import functions as F
 
     from blink_spark import queries as Q
+    from blink_spark.checkpoint import CheckpointManager
     from blink_spark.operators import dedup, similarity
 
     timings: dict[str, float] = {}
     extra: dict = {}
 
     def timed(name, fn):
-        # Every query hands its persisted stage DataFrames back via
-        # ``caches``; the harness releases them AFTER the clock stops —
+        # Every query persists its stage DataFrames through the harness's
+        # manager; the harness releases them AFTER the clock stops —
         # round 3 released them inside the timed region, which billed the
         # unpersist round-trips to the query (the minhash_dedup 2.3→3.1 s
         # regression). Release still happens before the NEXT query starts,
         # so cache/GC pressure never leaks across queries.
-        caches: list = []
+        stages = CheckpointManager(spark)
         t0 = time.time()
-        out = fn(caches)
+        out = fn(stages)
         timings[name] = round(time.time() - t0, 3)
-        for c in caches:
-            c.unpersist()
+        stages.unpersist()
         return out
 
     _warmup(spark)
@@ -148,7 +146,7 @@ def _bench_queries(spark, sf_dir: str) -> tuple[dict, dict]:
     # 1. flagship ER pipeline (throughput metric: turns/sec)
     n_convs = int(os.environ.get("SPARK_GRAFT_CONVS", "0")) or None
     tpath, n_turns = _prepare_transcripts(spark, sf_dir, n_conversations=n_convs)
-    timed("er_pipeline", lambda caches: _er_query(spark, tpath, caches))
+    timed("er_pipeline", lambda stages: _er_query(spark, tpath, stages))
     extra["er_turns"] = n_turns
     extra["er_turns_per_sec"] = round(n_turns / timings["er_pipeline"], 1)
     if os.environ.get("SPARK_GRAFT_ER_ONLY"):
@@ -160,26 +158,26 @@ def _bench_queries(spark, sf_dir: str) -> tuple[dict, dict]:
     # 2. MinHash near-dup clustering over documents
     timed(
         "minhash_dedup",
-        lambda caches: dedup.minhash_dedup_clusters(
-            docs, jaccard_threshold=0.5, caches=caches
+        lambda stages: dedup.minhash_dedup_clusters(
+            docs, jaccard_threshold=0.5, stages=stages
         ).count(),
     )
 
     # 3. ANN top-k over embeddings (LSH path — the scale path)
     timed(
         "ann_lsh_topk",
-        lambda caches: similarity.lsh_topk_neighbors(
-            emb, k=5, n_planes=6, n_tables=8, caches=caches
+        lambda stages: similarity.lsh_topk_neighbors(
+            emb, k=5, n_planes=6, n_tables=8, stages=stages
         ).count(),
     )
     # 4. token-blocking join (BM25-retrieval analog)
-    timed("token_blocking_join", lambda caches: Q.j4_token_blocking_join(spark, sf_dir).count())
+    timed("token_blocking_join", lambda stages: Q.j4_token_blocking_join(spark, sf_dir).count())
 
     # 4b. sorted-neighborhood blocking at pipeline scale: measures
     # global_rank's range-exchange + partitioned-window + broadcast-offset
     # plan on the sf-scaled documents corpus (the correctness rows run it
     # only at sf0.01)
-    def snm_sweep(caches):
+    def snm_sweep(stages):
         from pyspark.sql import functions as FF
 
         from blink_spark.operators import blocking as B
@@ -208,7 +206,7 @@ def _bench_queries(spark, sf_dir: str) -> tuple[dict, dict]:
         b = li.withColumn("rn", F.row_number().over(w)).where(F.col("rn") == 1).count()
         return a + b
 
-    timed("lineitem_agg_window", lambda caches: lineitem_sweep())
+    timed("lineitem_agg_window", lambda stages: lineitem_sweep())
     return timings, extra
 
 

@@ -14,6 +14,10 @@ this sandbox has no Iceberg runtime jars, so the same API is implemented
 over Parquet + an atomically-renamed ``_lineage.json`` sidecar. The sidecar
 is written only after the data commit succeeds, so a crashed write is
 re-run, never half-read.
+
+The manager also owns a run's persisted DataFrames: in-memory stages (no
+``base_dir``) and the operator intermediates registered via ``persist``,
+all released by ``unpersist``.
 """
 
 from __future__ import annotations
@@ -31,10 +35,24 @@ from pyspark.sql import functions as F
 @dataclass
 class CheckpointManager:
     spark: SparkSession
-    base_dir: str
+    base_dir: str | None = None  # None: in-memory stages, nothing durable
     run_id: str = "run0"
     stages_written: list[str] = field(default_factory=list)
     stages_resumed: list[str] = field(default_factory=list)
+    persisted: list[DataFrame] = field(default_factory=list, init=False, repr=False)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """Persist ``df`` and register it for release by :meth:`unpersist`."""
+        df = df.persist()
+        self.persisted.append(df)
+        return df
+
+    def unpersist(self, blocking: bool = False) -> None:
+        """Release every frame this manager persisted, once the results are
+        materialized; long-lived drivers otherwise accumulate partitions."""
+        for df in self.persisted:
+            df.unpersist(blocking)
+        self.persisted.clear()
 
     def _path(self, name: str) -> str:
         return os.path.join(self.base_dir, self.run_id, name)
@@ -85,7 +103,12 @@ class CheckpointManager:
         return self.spark.read.parquet(self._path(name))
 
     def stage(self, name: str, compute: Callable[[], DataFrame], partition_by: list[str] | None = None) -> DataFrame:
-        """Idempotent load-or-compute: resume point if the stage already committed."""
+        """Idempotent load-or-compute: resume point if the stage already
+        committed. Without a ``base_dir`` the stage is persisted in memory
+        (computed once, not per downstream action — the reference equally
+        caches entity encodings, eval_biencoder.py:229-253)."""
+        if self.base_dir is None:
+            return self.persist(compute())
         if self.exists(name):
             self.stages_resumed.append(name)
             return self.read(name)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.functions import hashing as H
 from blink_spark.functions.text import canonicalize
 from blink_spark.operators import skew
@@ -230,7 +231,7 @@ def cap_blocks(keys: DataFrame, max_block_size: int) -> tuple[DataFrame, DataFra
 def candidate_pairs(
     keys: DataFrame,
     cfg: BlockingConfig | None = None,
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
     new_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Self-equi-join on (modality, key) → canonical deduped candidate pairs.
@@ -241,10 +242,11 @@ def candidate_pairs(
     cross-encoder, ``blink/crossencoder/data_process.py:89-112``).
 
     The capped key set feeds THREE subplans (size agg + both join sides),
-    so it is persisted — at production scale this intermediate would be a
-    checkpoint table. The persisted handle is appended to ``caches`` (if
-    given) so callers can release it; ``ERPipeline`` wires this to
-    ``PipelineResult.unpersist()``.
+    so it is persisted through ``stages`` when the caller hands one in —
+    at production scale this intermediate would be a checkpoint table.
+    The manager owns its release (``ERPipeline`` passes the run's manager,
+    released by ``PipelineResult.unpersist()``); without an owner nothing
+    is persisted and the key set is recomputed per subplan.
 
     Delta mode (``new_keys`` given, see ``incremental.delta_candidate_pairs``):
     ``keys`` is the old ∪ new key table flagged ``is_new``, ``new_keys`` the
@@ -259,9 +261,8 @@ def candidate_pairs(
     else:
         kept, _ = cap_blocks(keys, cfg.max_block_size)
         join_cols = ["modality", "key"]
-    kept = kept.persist()
-    if caches is not None:
-        caches.append(kept)
+    if stages is not None:
+        kept = stages.persist(kept)
     # n = the probing side (the NEW conversations in delta mode), o = the other
     n, o = F.col("conv_n"), F.col("conv_o")
     a, b, flag = kept, kept, []

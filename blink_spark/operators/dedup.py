@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.functions import hashing as H
 from blink_spark.functions import strsim
 from blink_spark.functions.text import canonicalize, token_ngrams_from_tokens, tokens
@@ -72,20 +73,20 @@ def minhash_dedup_pairs(
     max_block: int = 200,
     text_col: str = "text",
     id_col: str = "doc_id",
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidate near-duplicate pairs (doc_a < doc_b).
 
     The exploded key table feeds three subplans (size agg + both join
-    sides), so it is persisted; pass ``caches`` to collect the handle for
-    release (same convention as ``blocking.candidate_pairs``)."""
+    sides), so it is persisted through ``stages`` when the caller hands one
+    in; the manager owns its release (same convention as
+    ``blocking.candidate_pairs``)."""
     keyed = (
         _minhash_keys_udf(docs, num_perm, bands, shingle_k, seed, text_col, id_col)
         .select("doc_id", F.explode("keys").alias("key"))
-        .persist()
     )
-    if caches is not None:
-        caches.append(keyed)
+    if stages is not None:
+        keyed = stages.persist(keyed)
     sizes = keyed.groupBy("key").agg(F.count(F.lit(1)).alias("n"))
     kept = keyed.join(F.broadcast(sizes.where(F.col("n") > max_block)), "key", "left_anti")
     a = kept.select("key", F.col("doc_id").alias("doc_a"))
@@ -170,18 +171,18 @@ def simhash_dedup_pairs(
     bands: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: band-bucket join then exact Hamming filter.
 
     Hamming distance is computed JVM-side via ``bit_count(a ^ b)``; the
-    signature UDF output is persisted (both join sides read it); pass
-    ``caches`` to collect the handle for release (same convention as
+    signature UDF output is read by both join sides, so it is persisted
+    through ``stages`` when the caller hands one in (same convention as
     ``minhash_dedup_pairs``).
     """
-    sigs = simhash_signatures(docs, text_col=text_col, id_col=id_col).persist()
-    if caches is not None:
-        caches.append(sigs)
+    sigs = simhash_signatures(docs, text_col=text_col, id_col=id_col)
+    if stages is not None:
+        sigs = stages.persist(sigs)
 
     def with_keys(df: DataFrame) -> DataFrame:
         width = 64 // bands

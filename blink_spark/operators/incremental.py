@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.operators import blocking, clustering, scoring
 from blink_spark.pipeline import PipelineConfig
 
@@ -51,20 +52,17 @@ class IncrementalResult:
     pairs: DataFrame         # delta candidate pairs (≥1 new side)
     edges: DataFrame         # delta match edges
     assignments: DataFrame   # full updated assignment (every conv_id)
-    metrics: dict
-    caches: list
+    stages: CheckpointManager  # owns every DataFrame the update persisted
 
     def unpersist(self, blocking: bool = False) -> None:
-        for df in self.caches:
-            df.unpersist(blocking)
-        self.caches.clear()
+        self.stages.unpersist(blocking)
 
 
 def delta_candidate_pairs(
     features_old: DataFrame,
     features_new: DataFrame,
     cfg: blocking.BlockingConfig | None = None,
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """Candidate pairs with at least one new side, never old×old.
 
@@ -79,7 +77,7 @@ def delta_candidate_pairs(
     pairs = blocking.candidate_pairs(
         keys_new.unionByName(keys_old),
         cfg,
-        caches=caches,
+        stages=stages,
         new_keys=keys_new.select("modality", "key").dropDuplicates(),
     )
     if cfg.snm_window >= 2:
@@ -127,18 +125,18 @@ def incremental_update(
     Returns the union feature table, the delta pairs/edges, and the full
     updated assignment. The caller owns persistence of the returned state
     tables (checkpoint/Iceberg in production; see
-    :func:`incremental_er_stream` for the streaming wiring).
+    :func:`incremental_er_stream` for the streaming wiring);
+    ``result.unpersist()`` releases the intermediates the update persisted.
     """
     config = config or PipelineConfig()
-    caches: list[DataFrame] = []
+    stages = CheckpointManager(new_transcripts.sparkSession)
 
     docs_new = blocking.conversation_docs(new_transcripts)
-    features_new = blocking.compute_features(docs_new, config.blocking).persist()
-    caches.append(features_new)
+    features_new = stages.persist(blocking.compute_features(docs_new, config.blocking))
 
-    pairs = delta_candidate_pairs(features_old, features_new, config.blocking, caches=caches)
+    pairs = delta_candidate_pairs(features_old, features_new, config.blocking, stages=stages)
     features_all = features_old.unionByName(features_new)
-    scored = scoring.score_pairs(pairs, features_all, config.scoring, caches=caches)
+    scored = scoring.score_pairs(pairs, features_all, config.scoring, stages=stages)
     edges = scoring.match_edges(scored, config.scoring)
 
     # CC runs on the TOUCHED subgraph only: a delta edge can change the
@@ -173,8 +171,7 @@ def incremental_update(
         pairs=pairs,
         edges=edges,
         assignments=assignments,
-        metrics={},
-        caches=caches,
+        stages=stages,
     )
 
 

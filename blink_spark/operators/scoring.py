@@ -27,10 +27,14 @@ expensive-rank split):
   and runs the edit-distance UDF on it (head length validated by the
   12-seed margin sweep, scripts/tune_blocking.py).
 
-This keeps the Arrow traffic of the big pass at ~1.7KB/pair (32-bit
-shingle hashes + 256-d vectors, NO text) instead of ~4KB/pair and skips
-the O(len²) edit distances almost everywhere — at
-10^12 turns the scorer's input bandwidth, not its FLOPs, is the bottleneck.
+Pass 1 ships 32-bit shingle hashes + 256-d vectors and NO text, and the
+O(len²) edit distances run only for the pairs pass 1 leaves undecided —
+at 10^12 turns the scorer's input bandwidth, not its FLOPs, is the
+bottleneck. Measured traffic into Python for the whole stage (both passes)
+is ≈6.3 KB per candidate pair on the long-transcript benchmark workload,
+where 98% of pairs reach pass 2 (4-core host; ``scoring.py_sent_mb`` ÷
+``blocking.candidate_pairs`` from ``python3 perfbench/run.py --workload
+batch_long_ckpt --seed 11 --seconds 10 --trace 1``).
 Gating depends only on the pair's own features — deterministic at any
 parallelism.
 """
@@ -46,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.functions import strsim
 
 
@@ -181,7 +186,7 @@ def score_pairs(
     pairs: DataFrame,
     features: DataFrame,
     cfg: ScoringConfig | None = None,
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """Score candidate pairs → per-feature columns + blended ``score``.
 
@@ -192,10 +197,10 @@ def score_pairs(
     so ``core_n ≥ τ/w_core`` accepts and ``core_n < (τ−w_exp)/w_core``
     rejects without ever reading the text heads.
 
-    The pass-1 result is persisted (it feeds both the decided and the
-    undecided branches — a deliberate barrier, see PLANS.md); the handle is
-    appended to ``caches`` (if given) so long-lived drivers can release it
-    after the scored output is materialized.
+    The pass-1 result feeds both the decided and the undecided branches,
+    so it is persisted through ``stages`` when the caller hands one in (a
+    deliberate barrier, see PLANS.md); the manager releases it after the
+    scored output is materialized. Without an owner nothing is persisted.
     """
     cfg = cfg or ScoringConfig()
     w_exp = cfg.w_lev + cfg.w_jw
@@ -209,9 +214,9 @@ def score_pairs(
         + cfg.w_cosine * F.col("cosine")
         + cfg.w_turns * F.col("turn_agree")
     )
-    base = cheap.withColumns({"core": core, "core_n": core / F.lit(w_core_total)}).persist()
-    if caches is not None:
-        caches.append(base)
+    base = cheap.withColumns({"core": core, "core_n": core / F.lit(w_core_total)})
+    if stages is not None:
+        base = stages.persist(base)
 
     nan = F.lit(float("nan"))
     decided = base.where((F.col("core_n") < lo_core) | (F.col("core_n") >= hi_core)).select(

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from blink_spark.checkpoint import CheckpointManager
+
 
 def _cosine_cols(va, vb):
     dot = F.aggregate(F.zip_with(va, vb, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)
@@ -163,7 +165,7 @@ def lsh_topk_neighbors(
     max_bucket: int = 2000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: hyperplane-bucket equi-join then exact
     re-scoring within buckets — the IVF-style scale path.
@@ -171,8 +173,8 @@ def lsh_topk_neighbors(
     At 100 TB the cross join in :func:`brute_force_topk` is infeasible;
     this replaces it with |bucket|-local joins. ``max_bucket`` caps hot
     buckets (same skew guard as ER blocking). The bucket-key table feeds
-    three subplans (size agg + both join sides), so it is persisted —
-    pass ``caches`` to collect the handle for release (same convention as
+    three subplans (size agg + both join sides), so it is persisted
+    through ``stages`` when the caller hands one in (same convention as
     ``blocking.candidate_pairs``).
     """
     keyed = (
@@ -180,10 +182,9 @@ def lsh_topk_neighbors(
             embeddings, n_planes=n_planes, n_tables=n_tables, seed=seed, id_col=id_col, vec_col=vec_col
         )
         .select("vec_id", F.explode("buckets").alias("bucket"))
-        .persist()
     )
-    if caches is not None:
-        caches.append(keyed)
+    if stages is not None:
+        keyed = stages.persist(keyed)
     sizes = keyed.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
     kept = keyed.join(F.broadcast(sizes.where(F.col("n") > max_bucket)), "bucket", "left_anti")
 
@@ -296,7 +297,7 @@ def ivf_topk_neighbors(
     max_list: int = 20000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    caches: list | None = None,
+    stages: CheckpointManager | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via IVF: coarse-quantizer buckets then exact
     re-scoring inside the ``nprobe`` probed lists — the second scale path
@@ -310,20 +311,16 @@ def ivf_topk_neighbors(
     separate corpus pass would rescan the embeddings for the same answer)
     → equi-join on list id → windowed top-k. No cross join anywhere;
     ``max_list`` caps degenerate lists the same way ``max_bucket`` caps
-    hot LSH buckets.
+    hot LSH buckets. The assignment frame feeds three consumers (size
+    census, corpus join side, query probe side), so it is persisted
+    through ``stages`` when the caller hands one in.
     """
     C = train_ivf_centroids(
         embeddings, n_lists=n_lists, seed=seed, sample_size=sample_size, id_col=id_col, vec_col=vec_col
     )
     assign = _ivf_assign(embeddings, C, nprobe, id_col, vec_col)
-    if caches is not None:
-        # persisted ONLY when the caller hands us a release list: the frame
-        # feeds three consumers (size census, corpus join side, query probe
-        # side), but a persist nobody unpersists would leak into the
-        # session's CacheManager for its lifetime (callers without `caches`
-        # trade recomputes of the Arrow pass for that).
-        assign = assign.persist()
-        caches.append(assign)
+    if stages is not None:
+        assign = stages.persist(assign)
     corpus_assign = assign.select(
         F.col("vec_id").alias("nbr_id"), F.element_at("lists", 1).alias("list_id")
     )

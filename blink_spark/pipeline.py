@@ -9,8 +9,9 @@ Public API (the engine's equivalent of the reference's
     result.edges         # thresholded match edges with scores
     result.metrics       # stage counters / lineage
 
-Every stage optionally checkpoints via :class:`CheckpointManager`, so a rerun
-resumes after the last committed stage (north_rule resumability).
+Every stage runs through one :class:`CheckpointManager`: durable with a
+``base_dir``, so a rerun resumes after the last committed stage (north_rule
+resumability), in memory without one.
 """
 
 from __future__ import annotations
@@ -39,31 +40,16 @@ class PipelineResult:
     edges: DataFrame
     assignments: DataFrame
     metrics: dict
-    caches: list = field(default_factory=list)
+    stages: CheckpointManager  # owns every DataFrame the run persisted
 
     def unpersist(self, blocking: bool = False) -> None:
-        """Release every DataFrame this run persisted (stage outputs and
-        operator-internal caches). Call after the results have been
-        materialized/written — long-lived drivers running many pipelines
-        otherwise accumulate cached partitions until LRU pressure."""
-        for df in self.caches:
-            df.unpersist(blocking)
-        self.caches.clear()
+        """Release the run's stage outputs and operator intermediates."""
+        self.stages.unpersist(blocking)
 
 
 class ERPipeline:
     def __init__(self, config: PipelineConfig | None = None):
         self.config = config or PipelineConfig()
-        # persisted-DataFrame registry: stage persists + operator-internal
-        # persists (blocking's capped keys, scoring's pass-1 barrier) land
-        # here and are released via PipelineResult.unpersist()
-        self.caches: list[DataFrame] = []
-
-    def unpersist(self, blocking: bool = False) -> None:
-        """Release caches registered by stage methods called standalone."""
-        for df in self.caches:
-            df.unpersist(blocking)
-        self.caches.clear()
 
     # -- stage wrappers (each independently usable) ----------------------
     def build_docs(self, transcripts: DataFrame) -> DataFrame:
@@ -72,9 +58,9 @@ class ERPipeline:
     def build_features(self, docs: DataFrame) -> DataFrame:
         return blocking.compute_features(docs, self.config.blocking)
 
-    def block(self, features: DataFrame) -> DataFrame:
+    def block(self, features: DataFrame, stages: CheckpointManager | None = None) -> DataFrame:
         keys = blocking.block_keys(features)
-        pairs = blocking.candidate_pairs(keys, self.config.blocking, caches=self.caches)
+        pairs = blocking.candidate_pairs(keys, self.config.blocking, stages=stages)
         if self.config.blocking.snm_window >= 2:
             # third modality (opt-in): sorted-neighborhood pairs catch the
             # low-Jaccard twins below the hash modalities' sensitivity
@@ -84,8 +70,10 @@ class ERPipeline:
             ).dropDuplicates()
         return pairs
 
-    def score(self, pairs: DataFrame, features: DataFrame) -> DataFrame:
-        return scoring.score_pairs(pairs, features, self.config.scoring, caches=self.caches)
+    def score(
+        self, pairs: DataFrame, features: DataFrame, stages: CheckpointManager | None = None
+    ) -> DataFrame:
+        return scoring.score_pairs(pairs, features, self.config.scoring, stages=stages)
 
     def cluster(self, edges: DataFrame) -> DataFrame:
         return clustering.connected_components(edges, max_iter=self.config.cc_max_iter)
@@ -100,23 +88,17 @@ class ERPipeline:
     ) -> PipelineResult:
         """End-to-end block → score → cluster.
 
-        ``compute_metrics=False`` skips the eager per-stage row counts
-        (three extra Spark jobs) — use for latency-sensitive paths; the
-        checkpointed path records the same counts in its lineage sidecars
-        for free.
-        """
-        def ck(name: str, fn, partition_by=None) -> DataFrame:
-            if checkpoints is None:
-                # no durable checkpoint requested: persist in-memory so each
-                # stage is computed once, not re-derived per downstream action
-                # (the reference equivalently caches entity encodings,
-                # eval_biencoder.py:229-253)
-                df = fn().persist()
-                self.caches.append(df)
-                return df
-            return checkpoints.stage(name, fn, partition_by=partition_by)
+        Stages run through ``checkpoints`` or a fresh in-memory manager;
+        ``result.unpersist()`` releases everything the run persisted.
 
-        if checkpoints is None:
+        ``compute_metrics=False`` skips the eager row counts (three extra
+        Spark jobs) — use for latency-sensitive paths. The checkpointed
+        path's lineage sidecars still hold each stage's row count, at one
+        census job per written stage; match edges are not a stage, so
+        their count is not among them.
+        """
+        stages = checkpoints if checkpoints is not None else CheckpointManager(spark)
+        if stages.base_dir is None:
             # docs has exactly one downstream consumer (the feature pass) in
             # the in-memory path: leave it unpersisted so the conversation
             # shuffle and the feature UDF pipeline into ONE materialization
@@ -125,12 +107,12 @@ class ERPipeline:
             # resumable stage.
             docs = self.build_docs(transcripts)
         else:
-            docs = ck("s0_docs", lambda: self.build_docs(transcripts))
-        features = ck("s1_features", lambda: self.build_features(docs))
-        pairs = ck("s2_pairs", lambda: self.block(features))
-        scored = ck("s3_scored", lambda: self.score(pairs, features))
+            docs = stages.stage("s0_docs", lambda: self.build_docs(transcripts))
+        features = stages.stage("s1_features", lambda: self.build_features(docs))
+        pairs = stages.stage("s2_pairs", lambda: self.block(features, stages))
+        scored = stages.stage("s3_scored", lambda: self.score(pairs, features, stages))
         edges = scoring.match_edges(scored, self.config.scoring)
-        assignments = ck("s4_clusters", lambda: self.cluster(edges))
+        assignments = stages.stage("s4_clusters", lambda: self.cluster(edges))
 
         # the conv list reads the (persisted/checkpointed) feature table,
         # not docs
@@ -143,10 +125,10 @@ class ERPipeline:
                 "n_candidate_pairs": pairs.count(),
                 "n_match_edges": edges.count(),
             }
-        if checkpoints is not None:
-            metrics["stages_written"] = list(checkpoints.stages_written)
-            metrics["stages_resumed"] = list(checkpoints.stages_resumed)
-        result = PipelineResult(
+        if stages.base_dir is not None:
+            metrics["stages_written"] = list(stages.stages_written)
+            metrics["stages_resumed"] = list(stages.stages_resumed)
+        return PipelineResult(
             docs=docs,
             features=features,
             pairs=pairs,
@@ -154,7 +136,5 @@ class ERPipeline:
             edges=edges,
             assignments=full_assignments,
             metrics=metrics,
-            caches=self.caches,
+            stages=stages,
         )
-        self.caches = []  # ownership moves to the result
-        return result

@@ -20,6 +20,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.functions.text import (
     canonicalize,
     context_quota_window,
@@ -63,31 +64,30 @@ def _fixture_path(spark: SparkSession, sf_dir: str, name: str) -> str:
 _STREAM_CALL = __import__("itertools").count()
 
 
-def _finalize(df: DataFrame, caches: list) -> DataFrame:
-    """Materialize a small result via ``localCheckpoint`` and release the
-    stage caches it depended on.
+def _finalize(df: DataFrame, *owners) -> DataFrame:
+    """Materialize a small result via ``localCheckpoint``, then release what
+    its ``owners`` (managers or run results) persisted.
 
     The driver's correctness runner executes every registry query in ONE
     SparkSession; pipeline-style entries persist multi-consumer
     intermediates, and without an explicit release those would pile up
     across the session (deterministic release beats waiting on the
     ContextCleaner's GC-driven cleanup). The result must be materialized
-    BEFORE the caches go away — ``localCheckpoint`` is eager, runs the plan
+    BEFORE the owners release — ``localCheckpoint`` is eager, runs the plan
     once, and the caller's later collect reads the checkpointed partitions.
 
     Trade-off, stated explicitly: the checkpoint RDD itself (one RESULT per
     pipeline-style query, MEMORY_AND_DISK) is released only when the
     returned DataFrame is GC'd (ContextCleaner). That is deliberate — the
     results here are driver-scale (≤ ~10^4 rows at correctness sf), so a
-    handful of lingering result partitions is noise, while the STAGE caches
+    handful of lingering result partitions is noise, while the stage frames
     released above are the sf-scaled ones that would actually accumulate.
     A runner that wants full determinism can unpersist the returned
     DataFrame after collecting it.
     """
     out = df.localCheckpoint()
-    for c in caches:
-        c.unpersist()
-    caches.clear()
+    for owner in owners:
+        owner.unpersist()
     return out
 
 
@@ -110,7 +110,7 @@ def _flagship_run(spark: SparkSession, n_conversations: int = 120, seed: int = 4
     without memoization each er_* entry re-synthesizes the corpus and
     re-runs the full pipeline (5 runs if all five are checked in a round).
     One run per (session, corpus) instead: results are localCheckpoint-ed
-    (eager, plan-free) and stage caches released immediately.
+    (eager, plan-free) and the run's persisted frames released immediately.
     Returns (transcripts, labels, assignments, pairs).
     """
     key = (spark.sparkContext.applicationId, n_conversations, seed)
@@ -1900,9 +1900,9 @@ def dedup_simhash_pairs(spark, sf_dir):
     oracle (valid ONLY at sf0.01 — the sf the driver checks; tests run this
     entry there too). Exact Hamming verified JVM-side via bit_count; kernel
     tested in tests/test_hashing.py."""
-    caches: list = []
-    out = dedup.simhash_dedup_pairs(_t(spark, sf_dir, "documents"), max_hamming=10, caches=caches)
-    return _finalize(out, caches)
+    stages = CheckpointManager(spark)
+    out = dedup.simhash_dedup_pairs(_t(spark, sf_dir, "documents"), max_hamming=10, stages=stages)
+    return _finalize(out, stages)
 
 
 @q(
@@ -1938,11 +1938,11 @@ def dedup_minhash_clusters(spark, sf_dir):
     exact all-pairs ground-truth oracle (brute-force Jaccard + transitive
     closure in SQL) — the strongest check an approximate dedup can get:
     the banded-LSH path must reproduce the exact clusters end to end."""
-    caches: list = []
+    stages = CheckpointManager(spark)
     out = dedup.minhash_dedup_clusters(
-        _t(spark, sf_dir, "documents"), jaccard_threshold=0.5, caches=caches
+        _t(spark, sf_dir, "documents"), jaccard_threshold=0.5, stages=stages
     )
-    return _finalize(out, caches)
+    return _finalize(out, stages)
 
 
 @q(
@@ -2074,12 +2074,12 @@ def sim_lsh_topk(spark, sf_dir):
     by scripts/gen_const_oracles.py, valid ONLY at that sf (tests run this
     entry at sf0.01 for the same reason). Independent correctness stays in
     tests/test_operators.py (recall ≥ 0.8 vs the brute-force oracle)."""
-    caches: list = []
+    stages = CheckpointManager(spark)
     out = similarity.lsh_topk_neighbors(
-        _t(spark, sf_dir, "embeddings"), k=3, n_tables=8, n_planes=10, caches=caches
+        _t(spark, sf_dir, "embeddings"), k=3, n_tables=8, n_planes=10, stages=stages
     )
     return _finalize(
-        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), caches
+        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), stages
     )
 
 
@@ -2426,7 +2426,7 @@ def er_docs_clusters(spark, sf_dir):
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )
-    return _finalize(out, res.caches)
+    return _finalize(out, res)
 
 
 @q(
@@ -2476,7 +2476,7 @@ def er_incremental_clusters(spark, sf_dir):
         F.col("conv_id").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
     )
-    return _finalize(out, phase1.caches + res.caches)
+    return _finalize(out, phase1, res)
 
 
 @q(
@@ -2652,12 +2652,12 @@ def sim_lsh_planted_topk(spark, sf_dir):
     Recall vs the exact brute force stays separately asserted in
     tests/test_operators.py; the sf-scaled leg is `sim_lsh_topk`."""
     emb = _planted_embedding_corpus(spark)
-    caches: list = []
+    stages = CheckpointManager(spark)
     out = similarity.lsh_topk_neighbors(
-        emb, k=3, n_planes=8, n_tables=6, seed=11, caches=caches
+        emb, k=3, n_planes=8, n_tables=6, seed=11, stages=stages
     )
     return _finalize(
-        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), caches
+        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), stages
     )
 
 
@@ -2673,12 +2673,12 @@ def sim_ivf_planted_topk(spark, sf_dir):
     (seeded init, fixed Lloyd iterations, nbr_id tie-breaks) → pinned VALUES
     oracle; recall vs brute force asserted in tests/test_operators.py."""
     emb = _planted_embedding_corpus(spark)
-    caches: list = []
+    stages = CheckpointManager(spark)
     out = similarity.ivf_topk_neighbors(
-        emb, k=3, n_lists=8, nprobe=3, seed=13, sample_size=256, caches=caches
+        emb, k=3, n_lists=8, nprobe=3, seed=13, sample_size=256, stages=stages
     )
     return _finalize(
-        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), caches
+        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), stages
     )
 
 
@@ -2687,12 +2687,12 @@ def sim_ivf_topk(spark, sf_dir):
     """IVF top-k over the sf-scaled embeddings table; deterministic (see
     `sim_ivf_planted_topk`), so the sf0.01 output is pinned like
     `sim_lsh_topk`'s (valid ONLY at sf0.01; tests run this entry there)."""
-    caches: list = []
+    stages = CheckpointManager(spark)
     out = similarity.ivf_topk_neighbors(
-        _t(spark, sf_dir, "embeddings"), k=3, n_lists=32, nprobe=4, caches=caches
+        _t(spark, sf_dir, "embeddings"), k=3, n_lists=32, nprobe=4, stages=stages
     )
     return _finalize(
-        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), caches
+        out.select("query_id", "nbr_id", F.round("cosine", 3).alias("cosine"), "rank"), stages
     )
 
 
@@ -2752,8 +2752,6 @@ def s12_checkpoint_resume(spark, sf_dir):
     silently recomputing. Returns per-stage lineage row counts + resumed
     flags, checked against a source-view oracle."""
     import uuid as _uuid
-
-    from blink_spark.checkpoint import CheckpointManager
 
     base = _fixture_path(spark, sf_dir, f"s12_ckpt_{_uuid.uuid4().hex[:8]}")
     docs = _t(spark, sf_dir, "documents")

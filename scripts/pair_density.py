@@ -31,6 +31,7 @@ def main() -> int:
     convs = [int(x) for x in sys.argv[1:]] or [80000, 100000, 160000]
     spark = get_spark("pair_density")
     from blink_spark import synth
+    from blink_spark.checkpoint import CheckpointManager
     from blink_spark.pipeline import ERPipeline
 
     for n in convs:
@@ -41,14 +42,13 @@ def main() -> int:
             t.repartition(32).write.mode("overwrite").parquet(path)
         t = spark.read.parquet(path)
         n_turns = t.count()
-        pipe = ERPipeline()
+        pipe, stages = ERPipeline(), CheckpointManager(spark)
         t0 = time.time()
-        feats = pipe.build_features(pipe.build_docs(t)).persist()
-        pairs = pipe.block(feats)
+        feats = stages.persist(pipe.build_features(pipe.build_docs(t)))
+        pairs = pipe.block(feats, stages)
         n_pairs = pairs.count()
         wall = round(time.time() - t0, 1)
-        feats.unpersist()
-        pipe.unpersist()
+        stages.unpersist()
         print(
             json.dumps(
                 {

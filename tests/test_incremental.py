@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from blink_spark import synth
+from blink_spark.checkpoint import CheckpointManager
 from blink_spark.operators import blocking, incremental
 from blink_spark.pipeline import ERPipeline, PipelineConfig
 
@@ -87,15 +88,13 @@ def test_delta_pairs_equal_batch(spark, split_features, overflow, snm_window):
         for r in pipe.block(feats_all).collect()
         if r["conv_a"] in new_ids or r["conv_b"] in new_ids
     }
-    caches: list = []
-    delta = incremental.delta_candidate_pairs(feats_old, feats_new, cfg.blocking, caches=caches)
+    stages = CheckpointManager(spark)
+    delta = incremental.delta_candidate_pairs(feats_old, feats_new, cfg.blocking, stages=stages)
     delta_rows = [(r["conv_a"], r["conv_b"]) for r in delta.collect()]
     assert batch, "no pair has a new side: the comparison would be vacuous"
     assert len(delta_rows) == len(set(delta_rows)), "delta pairs must be deduplicated"
     assert set(delta_rows) == batch
-    pipe.unpersist()
-    for c in caches:
-        c.unpersist()
+    stages.unpersist()
 
 
 def test_empty_delta_preserves_assignment(spark, corpus):

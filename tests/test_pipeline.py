@@ -1,5 +1,7 @@
 """End-to-end ER pipeline: the F1 ≥ 0.99 gate, invariants, determinism, resume."""
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -182,13 +184,67 @@ def test_single_conversation_is_its_own_cluster(spark):
     res.unpersist()
 
 
-def test_unpersist_releases_caches(spark):
-    t, _ = synth.transcripts_df(spark, synth.SynthConfig(n_conversations=20, seed=5))
-    res = ERPipeline().run(spark, t, compute_metrics=False)
+def _run_and_release(spark, t, tmp_path, durable: bool) -> None:
+    mgr = CheckpointManager(spark, str(tmp_path)) if durable else None
+    res = ERPipeline().run(spark, t, checkpoints=mgr, compute_metrics=False)
     res.assignments.count()
-    assert len(res.caches) > 0
     res.unpersist()
-    assert res.caches == []
+
+
+def _incremental_and_release(spark, t, tmp_path) -> None:
+    from blink_spark.operators import incremental
+
+    old_t = t.where(F.crc32("conv_id") % 2 == 0)
+    new_t = t.where(F.crc32("conv_id") % 2 == 1)
+    phase1 = ERPipeline().run(spark, old_t, compute_metrics=False)
+    res = incremental.incremental_update(new_t, phase1.features, phase1.assignments)
+    res.assignments.count()
+    res.unpersist()
+    phase1.unpersist()
+
+
+def _ann_recall_without_owner(spark, t, tmp_path) -> None:
+    from blink_spark.operators import similarity
+
+    rows = [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    similarity.ann_recall_vs_exact(emb, k=3, n_tables=4, n_planes=4)
+
+
+def _block_without_owner(spark, t, tmp_path) -> None:
+    pipe = ERPipeline()
+    pipe.block(pipe.build_features(pipe.build_docs(t))).count()
+
+
+@pytest.mark.parametrize(
+    "work",
+    [
+        functools.partial(_run_and_release, durable=False),
+        functools.partial(_run_and_release, durable=True),
+        _incremental_and_release,
+        _ann_recall_without_owner,
+        _block_without_owner,
+    ],
+    ids=["run-in-memory", "run-durable", "incremental", "ann-recall-no-owner", "block-no-owner"],
+)
+def test_release_leaves_no_persisted_rdds(spark, tmp_path, work):
+    """After a run is released — or after an operator is called without an
+    owner — no new persisted RDD may remain in the session. Connected
+    components' ``localCheckpoint`` RDDs are exempt: the ContextCleaner
+    releases them once their DataFrames are garbage-collected."""
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        m = jsc.getPersistentRDDs()
+        return {int(k): m.get(k).toString() for k in m.keySet().toArray()}
+
+    t, _ = synth.transcripts_df(spark, synth.SynthConfig(n_conversations=20, seed=5))
+    before = set(persistent())
+    work(spark, t, tmp_path)
+    leaked = {
+        k: v for k, v in persistent().items() if k not in before and "localCheckpoint" not in v
+    }
+    assert not leaked, f"leaked persisted RDDs: {leaked}"
 
 
 # ---- sorted-neighborhood blocking (blocking.global_rank / snm) --------------

@@ -81,6 +81,7 @@ def test_blocking_candidate_pairs_plan_shape(spark):
     The delta form (incremental.delta_candidate_pairs) runs the same kernel
     and must also keep its broadcast left-semi prune of the union key table
     to the delta's (modality, key) set."""
+    from blink_spark.checkpoint import CheckpointManager
     from blink_spark.operators import blocking, incremental
 
     df = spark.createDataFrame(
@@ -90,12 +91,12 @@ def test_blocking_candidate_pairs_plan_shape(spark):
     docs = blocking.conversation_docs(df.select("conv_id", F.col("turn_idx").alias("turn_idx"), "text"))
     feats = blocking.compute_features(docs)
     keys = blocking.block_keys(feats)
-    caches: list = []
-    pairs = blocking.candidate_pairs(keys, caches=caches)
+    stages = CheckpointManager(spark)
+    pairs = blocking.candidate_pairs(keys, stages=stages)
     delta = incremental.delta_candidate_pairs(
         feats.where(F.col("conv_id").cast("int") % 2 == 0),
         feats.where(F.col("conv_id").cast("int") % 2 == 1),
-        caches=caches,
+        stages=stages,
     )
     for name, df in (("batch", pairs), ("delta", delta)):
         plan = _plan(df)
@@ -106,5 +107,31 @@ def test_blocking_candidate_pairs_plan_shape(spark):
         r"BroadcastHashJoin \[modality, key\], \[modality, key\], LeftSemi",
         re.sub(r"#\d+L?", "", _plan(delta)),
     ), "delta: the broadcast left-semi prune to the delta key set is gone"
-    for c in caches:
-        c.unpersist()
+    stages.unpersist()
+
+
+def test_persist_only_through_the_checkpoint_manager():
+    """``CheckpointManager`` is the one owner of a run's persisted frames:
+    operators persist through the manager (``stages.persist(df)``), which
+    registers the frame for release. A DataFrame ``.persist(`` or
+    ``.cache(`` anywhere else in the package would bring back an
+    intermediate that nobody releases."""
+    import ast
+    import pathlib
+
+    import blink_spark
+
+    root = pathlib.Path(blink_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "checkpoint.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+                and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "stages")
+            ):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not offenders, f"persist outside CheckpointManager: {offenders}"
